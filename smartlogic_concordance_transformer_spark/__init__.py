@@ -9,9 +9,10 @@ source-code repositories:
 
 Pipeline stages (see SURVEY.md section 2 for the operator map):
 
-    parse      -- vectorized pandas UDF: JSON-LD -> typed struct
-    transform  -- validation + deterministic UUID derivation + concordance
-                  assembly, all native Column expressions (codegen'd)
+    transform  -- parse + validation + deterministic UUID derivation +
+                  concordance assembly: the reference's per-document fold
+                  in one Arrow-batched pandas UDF (pyfold.py), wrapped in
+                  a zero-shuffle projection
     encode     -- byte-exact UPP concordance JSON (reference key order)
     triples    -- (subj, pred, obj) edge/node emission + tombstone ops
     cc         -- iterative connected components for entity linking

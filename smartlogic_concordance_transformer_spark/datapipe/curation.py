@@ -8,9 +8,13 @@ run would execute, as ONE DataFrame DAG over the library operators:
       -> stratified mix -> deterministic train/test split
 
 Every stage is individually oracle-checked elsewhere; this module proves
-they COMPOSE — column contracts line up, the shared ``shingles`` builder
-keeps gram semantics identical across dedup/decontamination, and the
-whole cascade stays a lazy plan (no driver-side data movement).
+they COMPOSE — column contracts line up, and the shared ``shingles``
+builder keeps gram semantics identical across dedup/decontamination.
+Building the cascade is not free of jobs: ``strip_boilerplate`` and
+``flag_contaminated`` each run one job at construction time to collect
+their dictionary (recurring lines, benchmark shingles) to the driver and
+broadcast it. Everything else stays a lazy plan cut by the barriers
+below.
 
 Output is a per-document ledger (doc_id, kept, stage, split): ``stage``
 is the first stage that dropped the doc ('quality', 'repetition',
@@ -29,10 +33,13 @@ references a later stage replays the MinHash->LSH->Jaccard subgraph
 (measured 3.1x end-to-end at sf0.1: 58.3s with an identity barrier vs
 18.8s truncated, same 5,209-row ledger; the gap grows with stage
 count). Stage scan counts over
-the materialized base: exact dedup 1 (hash window), near-dedup 2
-(signature agg + candidate verify), decontamination 1 (explode +
-broadcast join), mix/split 0 extra (pure projections on survivors).
-Nothing all-pairs, nothing collected.
+the materialized base: exact dedup 1 (a window over a slim (key, hash)
+projection; the loser keys attach by anti-join), near-dedup 2
+(signature agg + candidate verify), decontamination 1 (one Arrow-batched
+membership pass over the precomputed shingle column, against the
+collected benchmark dictionary), mix/split 0 extra (pure projections on
+survivors). Nothing all-pairs; the only collects are the two dictionaries
+above.
 """
 
 from __future__ import annotations
@@ -207,7 +214,11 @@ def pretraining_pipeline(
     # bucketed by key, so the id-keyed attach is co-partitioned where a
     # content-hash window could never be. The loser set is identical to
     # the window's _rn > 1 rows by construction (same partition key,
-    # same orderBy, same row_number rule).
+    # same orderBy, same row_number rule). Like ``dedup.exact_dedup`` it
+    # assumes unique, non-null keys (unchecked — a check costs a pass):
+    # a loser key shared by several rows removes all of them, and a
+    # null-key loser is never removed (a null never equi-joins), though
+    # the ledger still records it as an exact_dup drop.
     #
     # s2 is checkpointed with the doc's shingle SET materialized as a
     # column: four downstream consumers (signatures, pair verify x2,

@@ -39,7 +39,13 @@ def exact_dedup(df: DataFrame, text_col: str = "text", key_col: str = "doc_id") 
     could. The corpus body crosses the network zero times. Survivor
     rows are identical (same partition key, same orderBy, same
     row_number rule); the slim frame's lineage is cut so the hash pass
-    runs once, not once per consumer of the anti-join."""
+    runs once, not once per consumer of the anti-join.
+
+    Precondition (not checked — a check would cost a pass): ``key_col``
+    is unique and non-null. Otherwise the anti-join on the key decides:
+    when a loser's key appears on several rows, every row with that key
+    is removed, including rows whose text is unique; and a loser whose
+    key is null is never removed, because a null never equi-joins."""
     h = F.sha2(F.col(text_col), 256).alias("_content_hash")
     w = Window.partitionBy("_content_hash").orderBy(key_col)
     losers = (

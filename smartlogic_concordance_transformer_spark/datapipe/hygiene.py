@@ -56,13 +56,17 @@ def _flag_contaminated_arrow(
     through an interpreted-HOF gram build and hash-joined the expansion
     against the broadcast dictionary; the kernel moves only (key, text)
     across the Arrow boundary and hands each batch to a set-membership
-    loop (guide §4.2 — same argument as ``text._repetition_arrow``).
+    loop (guide §4.2 — same argument as ``text.repetition_stats``).
 
     Exactness contract (pinned by
     ``test_flag_contaminated_arrow_equals_join``): the tokenizer is the
     shared Python twin of ``ws_tokens`` (Java ``\\s`` is ASCII-only,
     ``F.trim`` strips 0x20 only, split on a literal space, full-Unicode
-    lower), the gram rule replicates ``shingles`` exactly (greatest(W-k+1,
+    lower — Python's ``str.lower`` is locale-free, so parity assumes the
+    JVM lower-cases in the ROOT locale; under a Turkish/Azeri default
+    locale the JVM maps 'I' to dotless 'ı' and the kernel's grams stop
+    matching the JVM-built benchmark grams), the gram rule replicates
+    ``shingles`` exactly (greatest(W-k+1,
     1) grams, short docs yield one truncated gram, distinct-set
     semantics), the BENCHMARK side's grams are still JVM-built (the same
     expression the join path broadcasts, collected once — eval sets are

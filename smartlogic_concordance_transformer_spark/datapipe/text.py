@@ -206,61 +206,94 @@ def scrub_pii(text: Column | str) -> Column:
     return c
 
 
-def _dup_frac(items: Column) -> Column:
-    """(n - n_distinct) / n over an array — 0 for empty arrays."""
-    total = F.size(items)
-    return F.round(
-        (total - F.size(F.array_distinct(items))) / F.greatest(total, F.lit(1)), 6
-    )
-
-
 # Java \s for the whitespace tokenizer's Python replica: ASCII-only
 # [ \t\n\x0B\f\r], NOT Python's Unicode \s — a NBSP/U+2028 must stay part
-# of its token in both engines.
+# of its token on both sides of the JVM/Python boundary.
 _JAVA_WS = _pyre.compile("[ \t\n\x0b\f\r]+")
 
 
-def _repetition_arrow(
+def repetition_stats(
     df: DataFrame,
-    c: Column,
-    key_col: str,
-    ns: tuple[int, ...],
-    char_dup_ns: tuple[int, ...],
-    char_coverage_ns: tuple[int, ...],
+    text_col: str = "text",
+    key_col: str = "doc_id",
+    ns: tuple[int, ...] = (2, 3, 4),
+    char_dup_ns: tuple[int, ...] = (),
+    char_coverage_ns: tuple[int, ...] = (),
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Arrow-batched repetition kernel: every statistic computed per
-    document in one pandas UDF, value-identical to the SQL fold.
+    """Gopher-style repetition filter inputs (Rae et al. 2021, app. A1):
+    per document, the duplicate-word / duplicate-line / duplicate-
+    paragraph fractions plus, for each n in ``ns``, the fraction of all
+    word n-grams taken by the single most frequent n-gram, plus, for
+    each n in ``char_dup_ns``, an A1-STYLE PROXY for the "fraction of
+    characters in duplicated n-grams" columns (conventionally n=5..10).
+    High values flag boilerplate/spam/keyword-stuffed documents before
+    pretraining.
 
-    Why a Python kernel here (the same argument as pyfold.py's KG fold):
-    the ``via='fold'`` form is a chain of higher-order array functions —
-    per gram size an array_sort over (hash, len[, pos]) structs plus an
-    ``aggregate`` fold — and Spark evaluates HOF lambdas interpreted
-    (CodegenFallback), re-walking the Catalyst expression tree per array
-    element. Building the same integer counts with tokenized tuples and
-    a Counter is several times faster per document AND removes both the
-    ~1s of py4j Column-tree construction and the Catalyst/codegen cost
-    of the giant projection (measured at sf0.1 local[32]:
-    text_repetition 3.9s -> see OPTIMIZATION_r08.md; plan shrinks to
-    scan -> ArrowEvalPython -> project). Still one scan, zero shuffle,
-    zero explode — the operator stays a pure per-document projection.
+    The char-duplicate proxy weights gram counts by gram character
+    length — occurrences beyond the first of each gram count as
+    duplicated. This is NOT Rae et al.'s exact metric (which counts
+    UNIQUE character positions covered by duplicated n-grams, so
+    overlapping duplicated grams are not double-counted); thresholds
+    tuned on published A1 values do not transfer 1:1. Formally
 
-    Exactness contract (pinned by
-    ``test_repetition_arrow_equals_fold``): the tokenizer replicates the
-    JVM semantics used by ``ws_tokens``/``shingles`` — Java ``\\s`` is
-    ASCII-only, ``F.trim`` strips 0x20 only, ``split`` on a single
-    space, ``lower`` full Unicode — gram counts are exact integers,
-    divisions are the same int/int -> IEEE-double, and the final
-    round(6) happens JVM-side through the identical ``F.round``. Gram
-    equality compares the token tuples themselves (collision-free),
-    where the fold compares xxhash64(gram) — identical counts unless
-    two distinct grams of one document collide in 64 bits (p ~ 1e-15,
-    and the hash path would then be the WRONG one vs the string-keyed
-    oracle).
+        dup_{n}gram_char_frac =
+            sum_{g: c_g > 1} (c_g - 1) * chars(g) / sum_g c_g * chars(g)
+
+    — exact integer counts, 0 for documents with no repeated n-gram, 1
+    is approached by a document that is one phrase repeated.
+
+    ``char_coverage_ns`` adds, per size, the TRUE Rae et al. metric:
+    ``dup_{n}gram_char_coverage`` = fraction of UNIQUE character
+    positions (of the whitespace-normalized lowercased token stream)
+    covered by occurrences beyond the first of any duplicated word
+    n-gram — overlapping duplicated grams never double-count a
+    character. "Beyond the first" matches the published repro
+    convention (a doc's canonical copy of a phrase is not 'duplicated
+    text'); a document that is one phrase repeated m times approaches
+    coverage (m-1)/m from above as overlaps chain. The duplicate
+    occurrences' word-index intervals [p, p+n-1] are merged in one O(W)
+    walk over the word stream, summing covered word lengths + covered
+    separators (exactly the char-interval union, since spans are
+    word-aligned).
+
+    Plan: every output is a PER-DOCUMENT statistic, so nothing ever
+    needs to leave the document's row — one corpus scan, zero explode,
+    zero joins, ZERO SHUFFLE; the whole statistic set is computed by one
+    Arrow-batched pandas UDF (scan -> ArrowEvalPython -> project). Why a
+    Python kernel (the same argument as pyfold.py's KG fold): the
+    pure-SQL form is a chain of higher-order array functions — per gram
+    size an array_sort plus an ``aggregate`` fold — and Spark evaluates
+    HOF lambdas interpreted (CodegenFallback), re-walking the Catalyst
+    expression tree per array element. Building the same integer counts
+    with tokenized tuples and a Counter is several times faster per
+    document AND removes the py4j Column-tree construction and the
+    Catalyst/codegen cost of the giant projection (see
+    OPTIMIZATION_r08.md). Null text is treated as '' (one defined-stats
+    row per input doc, not silent omission).
+
+    Exactness contract: the tokenizer replicates the JVM semantics of
+    ``ws_tokens``/``dedup.shingles`` — Java ``\\s`` is ASCII-only,
+    ``F.trim`` strips 0x20 only, ``split`` on a single space, ``lower``
+    full Unicode in the JVM ROOT locale (a Turkish default locale would
+    lower-case 'I' differently on the JVM than Python does) — gram
+    counts are exact integers, divisions are the same int/int ->
+    IEEE-double, and the final round(6) happens JVM-side through
+    ``F.round``. Gram equality compares the token tuples themselves, so
+    distinct grams never collide. The independent JVM-side form of the
+    same statistics is ``tests/reference_repetition.py`` (an in-row SQL
+    fold over the product's Column tokenizers); the two are pinned
+    bit-identical by ``tests/test_datapipe.py::
+    test_repetition_arrow_equals_fold``.
+
+    Returns (key, [carry,] dup_word_frac, dup_line_frac, dup_para_frac,
+    top_{n}gram_frac ..., dup_{n}gram_char_frac ...,
+    dup_{n}gram_char_coverage ...), all rounded to 6.
     """
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
+    c = F.coalesce(F.col(text_col), F.lit(""))
     ns = tuple(ns)
     cds = tuple(char_dup_ns)
     cov = tuple(sorted(set(char_coverage_ns)))
@@ -317,9 +350,9 @@ def _repetition_arrow(
                     P.append(i)
                 else:
                     seen.add(g)
-            # the same word-walk as the fold: sep covered iff the end
-            # BEFORE this word's interval-open reaches it, word covered
-            # iff the end AFTER does
+            # the same word-walk as tests/reference_repetition.py: sep
+            # covered iff the end BEFORE this word's interval-open
+            # reaches it, word covered iff the end AFTER does
             chars = 0
             ptr = 0
             end = -1
@@ -351,448 +384,6 @@ def _repetition_arrow(
         *carry,
         *[F.round(F.col("_st")[f], 6).alias(f) for f in fields],
     )
-
-
-def repetition_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    ns: tuple[int, ...] = (2, 3, 4),
-    char_dup_ns: tuple[int, ...] = (),
-    hash_grams: bool = True,
-    via: str = "arrow",
-    char_coverage_ns: tuple[int, ...] = (),
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
-    """Gopher-style repetition filter inputs (Rae et al. 2021, app. A1):
-    per document, the duplicate-word / duplicate-line / duplicate-
-    paragraph fractions plus, for each n in ``ns``, the fraction of all
-    word n-grams taken by the single most frequent n-gram, plus, for
-    each n in ``char_dup_ns``, an A1-STYLE PROXY for the "fraction of
-    characters in duplicated n-grams" columns (conventionally n=5..10).
-    High values flag boilerplate/spam/keyword-stuffed documents before
-    pretraining.
-
-    The char-duplicate proxy weights gram counts by gram character
-    length — occurrences beyond the first of each gram count as
-    duplicated. This is NOT Rae et al.'s exact metric (which counts
-    UNIQUE character positions covered by duplicated n-grams, so
-    overlapping duplicated grams are not double-counted); thresholds
-    tuned on published A1 values do not transfer 1:1. Formally
-
-        dup_{n}gram_char_frac =
-            sum_{g: c_g > 1} (c_g - 1) * chars(g) / sum_g c_g * chars(g)
-
-    — exact integer counts, 0 for documents with no repeated n-gram, 1
-    is approached by a document that is one phrase repeated.
-
-    ``char_coverage_ns`` adds, per size, the TRUE Rae et al. metric:
-    ``dup_{n}gram_char_coverage`` = fraction of UNIQUE character
-    positions (of the whitespace-normalized lowercased token stream)
-    covered by occurrences beyond the first of any duplicated word
-    n-gram — overlapping duplicated grams never double-count a
-    character. "Beyond the first" matches the published repro
-    convention (a doc's canonical copy of a phrase is not 'duplicated
-    text'); a document that is one phrase repeated m times approaches
-    coverage (m-1)/m from above as overlaps chain. Computed in the same
-    zero-shuffle per-document fold plan: per size, the positional gram
-    stream sorts in-row, duplicate occurrences' word-index intervals
-    [p, p+n-1] come out as a sorted position list, and one O(W) fold
-    over the word stream merges the intervals while summing covered
-    word lengths + covered separators (exactly the char-interval union,
-    since spans are word-aligned). Arrow/fold paths only — the shuffle
-    form's explode discards positions.
-
-    Plan (``via='arrow'``, the default since r8): every output is a
-    PER-DOCUMENT statistic, so nothing ever needs to leave the
-    document's row — one corpus scan, zero explode, zero joins, ZERO
-    SHUFFLE; the whole statistic set is computed by one Arrow-batched
-    pandas UDF (see ``_repetition_arrow`` for why that beats the
-    interpreted HOF fold, and the exactness contract). ``via='fold'``
-    keeps the pure-SQL zero-Python form, value-identical: per gram size
-    the gram stream is sorted in-row (``array_sort``) and a single
-    ``aggregate`` fold over the sorted array counts duplicate runs:
-    the max run length is the top-gram count, and each occurrence beyond
-    the first of a run contributes its gram length to the duplicated-
-    char numerator. O(g log g) per document, all inside whole-stage
-    codegen, and the operator composes as a pure projection — at 100 TB
-    it runs at scan speed with no exchange at all. Measured at sf0.1
-    (nine gram sizes): 6.8s -> 4.8s vs the shuffle form, and the win
-    grows with corpus size because the shuffle form exchanges
-    ~distinct-gram-count rows per document while this form exchanges
-    nothing.
-
-    ``via='shuffle'`` keeps the round-5 form — ONE tagged explode feeds
-    one (key, n, gram) count and one conditional agg per output column
-    (both aggregations partially aggregate map-side; with ``hash_grams``
-    the shuffle payload is 12 bytes per distinct gram). Retained as the
-    independent cross-implementation for the equality regression test,
-    and for callers that want per-gram counts materializable.
-
-    Both forms share the ``shingles`` builder the dedup/decontamination
-    operators use (``distinct=False``), so gram semantics cannot drift
-    between operators. Null text is treated as '' (one defined-stats row
-    per input doc, not silent omission).
-
-    ``hash_grams`` (default): grams are compared as
-    ``(xxhash64(gram), length(gram))`` instead of the gram string —
-    sort keys / shuffle rows are 12 bytes instead of the ~n*word-length
-    string. Counts are identical unless two distinct grams of one
-    document collide in 64 bits (p ~ 1e-15 per document — and a
-    collision only merges two gram counts in that one document's stats,
-    no cross-document effect). ``hash_grams=False`` compares the literal
-    gram string.
-
-    Returns (key, dup_word_frac, dup_line_frac, dup_para_frac,
-    top_{n}gram_frac ..., dup_{n}gram_char_frac ...), all rounded to 6.
-    The two forms return bit-identical values (same integer counts, same
-    int/int divisions) — pinned by
-    ``tests/test_datapipe.py::test_repetition_fold_equals_shuffle``.
-    """
-    if via not in ("arrow", "fold", "shuffle"):
-        raise ValueError(f"via must be 'arrow', 'fold' or 'shuffle', got {via!r}")
-    if char_coverage_ns and via == "shuffle":
-        raise ValueError(
-            "char_coverage_ns requires via='arrow' or 'fold' — the shuffle "
-            "form's explode discards the gram positions the coverage union "
-            "needs"
-        )
-    if carry and via == "shuffle":
-        raise ValueError("carry requires via='arrow' or 'fold'")
-    from .dedup import shingles
-
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    if via == "arrow":
-        return _repetition_arrow(
-            df, c, key_col, ns, char_dup_ns, char_coverage_ns, carry=carry
-        )
-    words = ws_tokens(c)
-    lines = F.filter(
-        F.transform(F.split(c, "\n"), lambda x: F.trim(x)), lambda x: x != ""
-    )
-    paras = F.filter(
-        F.transform(F.split(c, "\n\n"), lambda x: F.trim(x)), lambda x: x != ""
-    )
-    if via == "fold":
-        frac_cols = [
-            F.col(key_col),
-            *[F.col(x) for x in carry],
-            _dup_frac(words).alias("dup_word_frac"),
-            _dup_frac(lines).alias("dup_line_frac"),
-            _dup_frac(paras).alias("dup_para_frac"),
-        ]
-        return _repetition_fold(
-            df, c, frac_cols, ns, char_dup_ns, hash_grams, shingles,
-            char_coverage_ns=char_coverage_ns,
-        )
-    # NB: the tag lambda must be built by a closure factory — a
-    # `lambda g, n=n:` default-arg idiom has arity 2, which F.transform
-    # interprets as an (element, index) lambda and silently passes the
-    # array INDEX as the second argument
-    if hash_grams:
-
-        def _tag(size: int):
-            return lambda g: F.struct(
-                F.lit(size).alias("n"),
-                F.xxhash64(g).alias("g"),
-                F.length(g).alias("l"),
-            )
-
-    else:
-
-        def _tag(size: int):
-            return lambda g: F.struct(
-                F.lit(size).alias("n"), g.alias("g"), F.length(g).alias("l")
-            )
-
-    all_ns = sorted(set(ns) | set(char_dup_ns))
-    tagged = F.flatten(
-        F.array(
-            *[
-                F.transform(shingles(c, k=n, word_grams=True, distinct=False), _tag(n))
-                for n in all_ns
-            ]
-        )
-    )
-    exploded = df.select(
-        key_col,
-        _dup_frac(words).alias("dup_word_frac"),
-        _dup_frac(lines).alias("dup_line_frac"),
-        _dup_frac(paras).alias("dup_para_frac"),
-        F.explode(tagged).alias("_t"),
-    ).select(
-        key_col,
-        "dup_word_frac",
-        "dup_line_frac",
-        "dup_para_frac",
-        F.col("_t.n").alias("_n"),
-        F.col("_t.g").alias("_g"),
-        F.col("_t.l").alias("_l"),
-    )
-    fracs = ["dup_word_frac", "dup_line_frac", "dup_para_frac"]
-    tops = [
-        F.round(
-            F.max(F.when(F.col("_n") == n, F.col("_c")))
-            / F.sum(F.when(F.col("_n") == n, F.col("_c"))),
-            6,
-        ).alias(f"top_{n}gram_frac")
-        for n in ns
-    ]
-    # gram char length rides the tag struct (computed once pre-explode);
-    # (c-1)*len numerator / c*len denominator are exact integer sums
-    gl = F.col("_l")
-    # denominator floor: an empty/whitespace/null doc tokenizes to a
-    # single zero-length gram, making sum(c*len) = 0 — the floor keeps
-    # the defined-stats contract (frac 0) instead of an ANSI
-    # divide-by-zero abort; mirrored in the DuckDB oracle
-    char_dups = [
-        F.round(
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        (F.col("_n") == n) & (F.col("_c") > 1),
-                        (F.col("_c") - F.lit(1)) * gl,
-                    )
-                ),
-                F.lit(0),
-            )
-            / F.greatest(
-                F.sum(F.when(F.col("_n") == n, F.col("_c") * gl)), F.lit(1)
-            ),
-            6,
-        ).alias(f"dup_{n}gram_char_frac")
-        for n in char_dup_ns
-    ]
-    return (
-        exploded.groupBy(key_col, *fracs, "_n", "_g", "_l")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy(key_col, *fracs)
-        .agg(*tops, *char_dups)
-    )
-
-
-def _repetition_fold(
-    df: DataFrame,
-    c: Column,
-    frac_cols: list,
-    ns: tuple[int, ...],
-    char_dup_ns: tuple[int, ...],
-    hash_grams: bool,
-    shingles,
-    char_coverage_ns: tuple[int, ...] = (),
-) -> DataFrame:
-    """Zero-shuffle repetition stats: per gram size, sort the in-row gram
-    stream and fold duplicate runs (see ``repetition_stats``). The fold
-    accumulator carries (prev gram, current run length, max run, dup-char
-    numerator, char denominator); sorting puts equal grams adjacent, so
-    occurrence i>1 of a gram is exactly an element equal to its
-    predecessor. One fold per gram size, shared when a size appears in
-    both ``ns`` and ``char_dup_ns``.
-
-    ``char_coverage_ns`` adds the TRUE Rae et al. A1 metric per size (see
-    ``repetition_stats``); its position-carrying gram streams are staged
-    as materialized columns (``withColumn``) before any lambda indexes
-    them — referencing an unmaterialized sort/filter expression inside a
-    later higher-order-function lambda re-evaluates it per element, the
-    O(n^2) trap ``ngram_perplexity`` documents. Still a pure projection
-    chain: zero shuffle, zero explode, zero joins."""
-    if hash_grams:
-
-        def _key(g):
-            return F.xxhash64(g)
-
-    else:
-
-        def _key(g):
-            return g
-
-    def _run_stats(n: int, arr: Column | None = None):
-        if arr is None:
-            arr = F.array_sort(
-                F.transform(
-                    shingles(c, k=n, word_grams=True, distinct=False),
-                    lambda g: F.struct(
-                        _key(g).alias("g"), F.length(g).cast("long").alias("l")
-                    ),
-                )
-            )
-        init = F.struct(
-            *[
-                F.lit(0).cast("long").alias(a)
-                for a in ("run", "mx", "dup", "den")
-            ],
-            F.lit(None).cast("long" if hash_grams else "string").alias("prev"),
-        )
-
-        def merge(acc, x):
-            # run==0 guards the first element (prev is null; a null
-            # comparison would yield null, and `when` treats it as false
-            # — correct, but the guard makes it explicit)
-            new_run = F.when(
-                (acc["run"] > F.lit(0)) & (x["g"] == acc["prev"]),
-                acc["run"] + F.lit(1),
-            ).otherwise(F.lit(1).cast("long"))
-            return F.struct(
-                new_run.alias("run"),
-                F.greatest(acc["mx"], new_run).alias("mx"),
-                (
-                    acc["dup"]
-                    + F.when(new_run > F.lit(1), x["l"]).otherwise(
-                        F.lit(0).cast("long")
-                    )
-                ).alias("dup"),
-                (acc["den"] + x["l"]).alias("den"),
-                x["g"].alias("prev"),
-            )
-
-        return F.aggregate(arr, init, merge), F.size(arr)
-
-    cov = sorted(set(char_coverage_ns))
-    work = df
-    if cov:
-        # stage 1: the token array, materialized once and shared by every
-        # coverage size's gram builder, denominator, and word-walk fold
-        work = work.withColumn("_rw0", ws_tokens(c))
-        rw = F.col("_rw0")
-        for n in cov:
-            # stage 2 per size: position-carrying sorted gram stream —
-            # struct (g, l, i) sorts by gram first, so duplicate runs stay
-            # adjacent and the FIRST element of a run is the first
-            # occurrence in document order (i ascends within a run). Gram
-            # construction replays `shingles` exactly (same tokenizer,
-            # same short-doc single-truncated-gram rule), so the proxy and
-            # coverage columns agree on what a gram is.
-            # NB: closure factories, not default-arg lambdas — an extra
-            # `n=n` default raises the lambda's arity and PySpark reads
-            # it as the (element, index) form (the _tag gotcha below)
-            def _gram_at(size: int):
-                return lambda i: F.array_join(
-                    F.slice(rw, i + F.lit(1), size), " "
-                )
-
-            cnt = F.greatest(F.size(rw) - F.lit(n - 1), F.lit(1))
-            grams = F.transform(
-                F.sequence(F.lit(0), cnt - F.lit(1)), _gram_at(n)
-            )
-            work = work.withColumn(
-                f"_sp{n}",
-                F.array_sort(
-                    F.transform(
-                        grams,
-                        lambda g, i: F.struct(
-                            _key(g).alias("g"),
-                            F.length(g).cast("long").alias("l"),
-                            i.cast("long").alias("i"),
-                        ),
-                    )
-                ),
-            )
-        for n in cov:
-            # stage 3 per size: duplicate-occurrence positions = elements
-            # equal to their predecessor in the gram-sorted stream (every
-            # occurrence beyond a gram's first), re-sorted to document
-            # order. F.get is 0-based and null out-of-bounds, so j=0
-            # compares against null and drops — first elements never dup.
-            sp = F.col(f"_sp{n}")
-
-            def _eq_prev(arr: Column):
-                return lambda x, j: F.get(arr, j - F.lit(1))["g"] == x["g"]
-
-            work = work.withColumn(
-                f"_P{n}",
-                F.array_sort(
-                    F.transform(
-                        F.filter(sp, _eq_prev(sp)), lambda x: x["i"]
-                    )
-                ),
-            )
-
-    stats = {
-        n: _run_stats(n, arr=F.col(f"_sp{n}") if n in cov else None)
-        for n in sorted(set(ns) | set(char_dup_ns))
-    }
-    cols = list(frac_cols)
-    for n in ns:
-        st, sz = stats[n]
-        cols.append(
-            F.round(st["mx"] / F.greatest(sz, F.lit(1)), 6).alias(
-                f"top_{n}gram_frac"
-            )
-        )
-    for n in char_dup_ns:
-        # same zero-denominator floor as the shuffle form: an empty doc
-        # tokenizes to a single zero-length gram (den = 0)
-        st, _ = stats[n]
-        cols.append(
-            F.round(st["dup"] / F.greatest(st["den"], F.lit(1)), 6).alias(
-                f"dup_{n}gram_char_frac"
-            )
-        )
-    if cov:
-        rw = F.col("_rw0")
-        den = F.greatest(F.length(F.array_join(rw, " ")), F.lit(1))
-        wl = F.transform(
-            rw,
-            lambda w, j: F.struct(
-                F.length(w).cast("long").alias("l"), j.cast("long").alias("j")
-            ),
-        )
-        for n in cov:
-            # stage 4 per size: one O(W) walk over the word stream merges
-            # the duplicate occurrences' word-index intervals [p, p+n-1]
-            # on the fly. Positions are unique, so at most one interval
-            # opens per word — the accumulator needs only a cursor into
-            # the (sorted) position list and the running max interval end:
-            #   word j is covered      iff max(p+n-1 : p <= j)   >= j
-            #   separator (j-1, j) is  iff max(p+n-1 : p <= j-1) >= j
-            # (a span's chars = its words plus the separators strictly
-            # inside it — spans are word-aligned, so summing covered word
-            # lengths + covered separators IS the char-interval union).
-            P = F.col(f"_P{n}")
-            init = F.struct(
-                F.lit(0).cast("long").alias("chars"),
-                F.lit(0).cast("int").alias("ptr"),
-                F.lit(-1).cast("long").alias("end"),
-            )
-
-            def _walk(size: int, pos: Column):
-                def merge(acc, x):
-                    sep = (
-                        F.when(
-                            (x["j"] > F.lit(0)) & (acc["end"] >= x["j"]),
-                            F.lit(1),
-                        )
-                        .otherwise(F.lit(0))
-                        .cast("long")
-                    )
-                    hasp = F.coalesce(
-                        F.get(pos, acc["ptr"]) == x["j"], F.lit(False)
-                    )
-                    end2 = F.when(hasp, x["j"] + F.lit(size - 1)).otherwise(
-                        acc["end"]
-                    )
-                    ptr2 = (
-                        acc["ptr"]
-                        + F.when(hasp, F.lit(1)).otherwise(F.lit(0))
-                    ).cast("int")
-                    add = F.when(end2 >= x["j"], x["l"]).otherwise(
-                        F.lit(0).cast("long")
-                    )
-                    return F.struct(
-                        (acc["chars"] + sep + add).alias("chars"),
-                        ptr2.alias("ptr"),
-                        end2.alias("end"),
-                    )
-
-                return merge
-
-            chars = F.aggregate(
-                wl, init, _walk(n, P), lambda a: a["chars"]
-            )
-            cols.append(
-                F.round(chars / den, 6).alias(f"dup_{n}gram_char_coverage")
-            )
-    return work.select(*cols)
 
 
 def chunk_documents(
@@ -1353,7 +944,7 @@ def char_entropy(
     characters. Returns (key_col, n_chars, entropy); empty/null text
     scores 0.0 over 0 chars.
 
-    ZERO-SHUFFLE pure projection (the repetition-fold discipline): per
+    ZERO-SHUFFLE pure projection (every statistic stays in its row): per
     row, the distinct-character array drives an in-row fold whose terms
     count occurrences with ``size(filter(...))`` — O(distinct_chars *
     n_chars) comparisons inside codegen, no explode, no Exchange.

@@ -1,7 +1,7 @@
 """End-to-end batch job: source table -> graph tables, resumable.
 
     read source (only pending buckets — partition-pruned)
-      -> parse (pandas UDF) -> validate/derive/assemble (native exprs)
+      -> parse/validate/derive/assemble (one Arrow-batched fold, pyfold.py)
       -> upp + quarantine + triples, written per bucket with ledger commits
       -> optional connected-components canonicalization over the full edge set
       -> per-partition metrics manifest

@@ -1,21 +1,25 @@
 """Fused Arrow engine: parse + validate + derive + assemble in ONE
 Arrow-batched pandas UDF.
 
-Why this exists alongside the pure-SQL engine in transform.py: the per-doc
-fold uses higher-order array functions on the SQL path, and Spark
-evaluates HOF lambdas interpreted (CodegenFallback) — measured ~900us/doc
-on this workload. The same fold in plain Python is ~53us/doc (17x), and
-Python workers are separate processes, so it also *scales* better than a
-shared-heap JVM under allocation pressure. ``input_hint`` mandates
-pandas/Arrow UDFs (no per-row Python at the Spark level) — this is that
-path, one UDF call per ~10k-row Arrow batch.
+Why a Python kernel: expressed in Spark SQL, the per-doc fold needs
+higher-order array functions, and Spark evaluates HOF lambdas interpreted
+(CodegenFallback) — measured ~900us/doc on this workload. The same fold
+in plain Python is ~53us/doc (17x), and Python workers are separate
+processes, so it also *scales* better than a shared-heap JVM under
+allocation pressure. ``input_hint`` mandates pandas/Arrow UDFs (no
+per-row Python at the Spark level) — this is that path, one UDF call per
+~10k-row Arrow batch.
 
 Byte-exactness: the emitted JSON matches Go's ``json.Marshal`` key order
 and Spark's ``to_json`` byte-for-byte (compact separators, raw UTF-8).
-The two engines are cross-checked for equality in tests; the SQL engine
-remains the DuckDB-oracle-checkable reference.
+The fold is cross-checked against the pure-Python
+``tests/reference_model.py`` (generated corpus, unicode, Hypothesis
+payloads), and every quarantine branch's exact error text is pinned by
+``tests/test_quarantine_errors.py``.
 
-Parity map (reference file:line): see transform.py — semantics identical.
+Parity map (reference file:line): ``convert_one`` follows
+``service.go:96-300`` branch by branch; docs/COVERAGE.md maps each
+operator.
 """
 
 from __future__ import annotations

@@ -127,7 +127,9 @@ def convert(payload: str):
                 continue  # location dups skipped, keep first (service.go:266-269)
             conc.append({"authority": auth, "authorityValue": v, "uuid": u})
 
+    # Go's json.Marshal writes non-ASCII as raw UTF-8, not \u escapes
     return "valid", json.dumps(
         {"authority": authority, "uuid": uuid, "concordances": conc},
         separators=(",", ":"),
+        ensure_ascii=False,
     )

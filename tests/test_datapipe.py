@@ -334,25 +334,6 @@ def test_repetition_char_dup_fractions(spark):
     assert got[3].top_2gram_frac == 0.6
 
 
-def test_repetition_fold_equals_shuffle(spark):
-    # the zero-shuffle fold form and the round-5 explode/groupBy form are
-    # independent implementations of the same per-document statistics —
-    # they must return bit-identical rows (same integer counts, same
-    # int/int divisions) on a real corpus, with and without gram hashing
-    from smartlogic_concordance_transformer_spark.datapipe import repetition_stats
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for hg in (True, False):
-        a = repetition_stats(
-            docs, ns=(2, 3), char_dup_ns=(2, 5), hash_grams=hg, via="fold"
-        )
-        b = repetition_stats(
-            docs, ns=(2, 3), char_dup_ns=(2, 5), hash_grams=hg, via="shuffle"
-        )
-        assert a.columns == b.columns
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_minhash_inrow_fold_equals_explode_agg(spark):
     # the r8 in-row signature fold must be bit-equal to the former
     # explode + per-seed min aggregation (the same xxhash64 chain with
@@ -381,14 +362,15 @@ def test_minhash_inrow_fold_equals_explode_agg(spark):
 
 
 def test_repetition_arrow_equals_fold(spark):
-    # the r8 Arrow kernel vs the pure-SQL fold: independent
-    # implementations of the same per-document statistics must return
-    # bit-identical rows — on the real corpus AND on an adversarial set
-    # exercising the tokenizer's JVM-parity edges (empty text, null,
+    # the Arrow kernel vs the pure-SQL fold of tests/reference_repetition:
+    # independent implementations of the same per-document statistics
+    # must return bit-identical rows — on the real corpus AND on an
+    # adversarial set exercising the tokenizer's JVM-parity edges (empty text, null,
     # whitespace-only, non-ASCII letters + case, NBSP which Java \s does
     # NOT treat as whitespace, blank lines, short docs below every gram
     # size, heavy exact repetition, overlapping duplicated grams)
     from smartlogic_concordance_transformer_spark.datapipe import repetition_stats
+    from tests.reference_repetition import repetition_fold
 
     adversarial = [
         (0, None),
@@ -409,20 +391,18 @@ def test_repetition_arrow_equals_fold(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for frame in (docs, adv):
         a = repetition_stats(
-            frame, ns=(2, 3), char_dup_ns=(2, 5), char_coverage_ns=(2, 5),
-            via="arrow",
+            frame, ns=(2, 3), char_dup_ns=(2, 5), char_coverage_ns=(2, 5)
         )
-        b = repetition_stats(
-            frame, ns=(2, 3), char_dup_ns=(2, 5), char_coverage_ns=(2, 5),
-            via="fold",
+        b = repetition_fold(
+            frame, ns=(2, 3), char_dup_ns=(2, 5), char_coverage_ns=(2, 5)
         )
         assert a.columns == b.columns
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_repetition_fold_has_no_shuffle(spark):
-    # every A1 statistic is per-document: the default fold form must stay
-    # a pure projection — no Exchange, no explode-driven Generate — so at
+    # every A1 statistic is per-document: the operator must stay a pure
+    # projection — no Exchange, no explode-driven Generate — so at
     # 100 TB it runs at scan speed with zero cross-executor traffic
     from smartlogic_concordance_transformer_spark.datapipe import repetition_stats
 
@@ -432,9 +412,6 @@ def test_repetition_fold_has_no_shuffle(spark):
     )._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Generate" not in plan
-
-    with __import__("pytest").raises(ValueError):
-        repetition_stats(docs, via="nope")
 
 
 def test_minhash_incremental_candidates(spark):

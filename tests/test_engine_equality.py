@@ -1,30 +1,48 @@
-"""The two transform engines (sql Column-expressions vs fused Arrow UDF)
-must be byte-equal on generated data, including unicode and every
-quarantine branch."""
-
-from pyspark.sql import functions as F
+"""The transform (fused Arrow UDF fold) vs the pure-Python reference model
+on generated data, including unicode and every quarantine branch the
+generator plants: valid rows must be byte-equal, quarantined rows must
+agree on status and error."""
 
 from smartlogic_concordance_transformer_spark.gen import generate_source_repos
-from smartlogic_concordance_transformer_spark.transform import transform
+from smartlogic_concordance_transformer_spark.transform import STATUS_HTTP, transform
+from tests.reference_model import convert
 
 
-def _collect(spark, df, engine):
-    good, quar = transform(df, engine=engine, carry=("path",))
-    g = {r.path: (r.concept_uuid, r.authority, r.upp_json, r.op) for r in good.collect()}
-    q = {r.path: (r.concept_uuid, r.status, r.http_code, r.error) for r in quar.collect()}
+def _collect(df):
+    good, quar = transform(df, carry=("path",))
+    g = {r.path: r.upp_json for r in good.collect()}
+    q = {r.path: (r.status, r.http_code, r.error) for r in quar.collect()}
     return g, q
 
 
+def _assert_matches_reference(contents, good, quar):
+    assert set(good) | set(quar) == set(contents)
+    assert not (set(good) & set(quar))
+    for path, content in contents.items():
+        status, expected = convert(content)
+        if status == "valid":
+            assert good.get(path) == expected, (path, content, quar.get(path))
+        else:
+            assert path in quar, (path, content, good.get(path))
+            g_status, http_code, error = quar[path]
+            assert g_status == status, (content, quar[path], expected)
+            assert http_code == STATUS_HTTP[g_status]
+            # the same discriminating-substring check as
+            # test_property_transform::test_spark_matches_reference_model
+            assert (
+                expected.split(" is not a valid ")[-1] in error
+                or expected in error
+                or expected == "parse"
+            ), (content, error, expected)
+
+
 def test_engines_byte_equal_on_generated_corpus(spark):
-    src = generate_source_repos(spark, 3000, seed=123).withColumnRenamed("path", "path")
-    g_sql, q_sql = _collect(spark, src, "sql")
-    g_arrow, q_arrow = _collect(spark, src, "arrow")
-    assert set(g_sql) == set(g_arrow)
-    assert set(q_sql) == set(q_arrow)
-    for k in g_sql:
-        assert g_sql[k] == g_arrow[k], (k, g_sql[k], g_arrow[k])
-    for k in q_sql:
-        assert q_sql[k] == q_arrow[k], (k, q_sql[k], q_arrow[k])
+    src = generate_source_repos(spark, 3000, seed=123)
+    contents = {r.path: r.content for r in src.select("path", "content").collect()}
+    assert len(contents) == 3000
+    good, quar = _collect(src)
+    assert good and quar
+    _assert_matches_reference(contents, good, quar)
 
 
 def test_engines_equal_on_unicode(spark):
@@ -38,9 +56,6 @@ def test_engines_equal_on_unicode(spark):
         [("r", "p0", "c", "json", payload)],
         "repo string, path string, commit string, lang string, content string",
     )
-    out = {}
-    for engine in ("sql", "arrow"):
-        good, _ = transform(df, engine=engine)
-        out[engine] = good.first().upp_json
-    assert out["sql"] == out["arrow"]
-    assert "éüñ" in out["arrow"]  # raw UTF-8, no \u escapes
+    good, quar = _collect(df)
+    _assert_matches_reference({"p0": payload}, good, quar)
+    assert "éüñ" in good["p0"]  # raw UTF-8, no \u escapes

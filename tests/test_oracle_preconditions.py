@@ -70,7 +70,7 @@ def test_raw_corpus_jaccard_band_is_empty():
 def test_pipeline_lsh_candidates_cover_qualifying_pairs(spark, plant):
     """pipeline_e2e's near-dedup (threshold 0.8, CLEANED text) does NOT
     have an empty band — 8 qualifying pairs sit in [0.857, 0.898) on the
-    shipped corpus — so its engine=oracle equality rests on the stronger,
+    shipped corpus — so its engine-vs-oracle equality rests on the stronger,
     deterministic fact asserted here: the fixed-seed 16x4 MinHash banding
     produces a candidate set that covers EVERY all-pairs qualifying pair
     of the cleaned corpus. (The pipeline's s2 stage is a subset of the
@@ -121,7 +121,7 @@ def test_pipeline_lsh_candidates_cover_qualifying_pairs(spark, plant):
 
 
 def test_pipeline_substring_stage_fires(spark):
-    """pipeline_substring's engine=oracle hash equality would also hold
+    """pipeline_substring's engine-vs-oracle hash equality would also hold
     if the excision stage silently no-opped (both sides would emit the
     unrewritten text) — assert the planted duplication actually fires on
     the shipped corpus: keep-first leaves exactly ONE copy of the planted
@@ -151,7 +151,7 @@ def test_pipeline_substring_stage_fires(spark):
 
 
 def test_pipeline_paragraph_stage_fires(spark):
-    """pipeline_paragraph's engine=oracle hash equality would also hold
+    """pipeline_paragraph's engine-vs-oracle hash equality would also hold
     if the paragraph stage silently no-opped — assert the planted
     duplication actually fires on the shipped corpus: keep-first leaves
     exactly ONE copy of each planted community-guidelines group line and

@@ -343,34 +343,9 @@ def test_token_budget_mix_two_phase_plan(spark):
     assert len(corpus_only) <= 1, plan  # at most the tiny offsets window
 
 
-def test_repetition_with_coverage_is_zero_shuffle(spark):
-    # the true-A1 char-coverage columns must not break the fold plan's
-    # design claim: pure projection chain, no Exchange, no Generate, no
-    # Python — and the staged positional streams must stay materialized
-    # (no array_sort inlined into a get()/filter() lambda, which would
-    # re-sort per element). Library surface directly — the contract
-    # query's _spread adds its own upstream repartition exchange.
-    from smartlogic_concordance_transformer_spark.datapipe.text import (
-        repetition_stats,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    df = repetition_stats(
-        docs, ns=(2, 3, 4), char_dup_ns=(5, 10), char_coverage_ns=(5, 10),
-        via="fold",
-    )
-    plan = _plan(df)
-    assert "Exchange" not in plan
-    assert "Generate" not in plan
-    assert "Python" not in plan
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "get(array_sort" not in opt
-    assert "filter(array_sort" not in opt
-
-
 def test_repetition_arrow_is_zero_shuffle_single_kernel(spark):
-    # the r8 default: same per-document contract, computed by ONE
-    # Arrow-batched kernel — no Exchange, no Generate, and exactly one
+    # every statistic is per-document, computed by ONE Arrow-batched
+    # kernel — no Exchange, no Generate, and exactly one
     # ArrowEvalPython (the asNondeterministic pin must keep the
     # optimizer from duplicating it below a gate filter)
     from pyspark.sql import functions as F

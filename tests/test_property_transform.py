@@ -8,7 +8,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from smartlogic_concordance_transformer_spark.transform import parse_stage, transform
+from smartlogic_concordance_transformer_spark.transform import transform
 from tests.reference_model import convert, md5_uuid
 
 UUID = "20db1bd6-59f9-4404-adb5-3165a448f8b0"
@@ -89,13 +89,12 @@ def test_spark_matches_reference_model(spark, batch):
     df = spark.createDataFrame(
         rows, "repo string, path string, commit string, lang string, content string"
     )
-    keymap = {r.doc_key: int(r.path[1:]) for r in parse_stage(df).select("doc_key", "path").collect()}
-    good, quar = transform(df)
+    good, quar = transform(df, carry=("path",))
     got = {}
     for r in good.collect():
-        got[keymap[r.doc_key]] = ("valid", r.upp_json)
+        got[int(r.path[1:])] = ("valid", r.upp_json)
     for r in quar.collect():
-        got[keymap[r.doc_key]] = (r.status, r.error)
+        got[int(r.path[1:])] = (r.status, r.error)
 
     for i, content in enumerate(batch):
         status, expected = convert(content)

@@ -15,7 +15,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from smartlogic_concordance_transformer_spark.transform import parse_stage, transform
+from smartlogic_concordance_transformer_spark.transform import transform
 
 RES = "/root/reference/resources"
 UUID = "20db1bd6-59f9-4404-adb5-3165a448f8b0"
@@ -98,17 +98,16 @@ HANDLER_GOLDENS = {
 }
 
 
-@pytest.fixture(scope="module", params=["sql", "arrow"])
-def results(spark, request):
+@pytest.fixture(scope="module")
+def results(spark):
     rows = [
         ("ft/fixtures", name, "0" * 40, "json", open(os.path.join(RES, name)).read())
         for name in sorted(os.listdir(RES))
     ]
     df = spark.createDataFrame(rows, "repo string, path string, commit string, lang string, content string")
-    keymap = {r.doc_key: r.path for r in parse_stage(df).select("doc_key", "path").collect()}
-    good, quar = transform(df, engine=request.param)
-    good_by_path = {keymap[r.doc_key]: r for r in good.collect()}
-    quar_by_path = {keymap[r.doc_key]: r for r in quar.collect()}
+    good, quar = transform(df, carry=("path",))
+    good_by_path = {r.path: r for r in good.collect()}
+    quar_by_path = {r.path: r for r in quar.collect()}
     return good_by_path, quar_by_path
 
 
